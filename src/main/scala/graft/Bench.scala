@@ -46,22 +46,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmDir = "/root/testdata/sf0.001"
-    // dev-only like Verify's: SPARK_GRAFT_MASTER=local-cluster[2,8,8192]
-    // times the sweep across REAL executor JVMs (the driver never sets
-    // it, so driver runs keep the local[n] contract)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftSession.wireLocalCluster(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"), master)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    val spark = GraftSession.start(GraftSession.builder())
     // dev-only: SPARK_GRAFT_ONLY=q110,q47 times a subset (the driver
     // never sets it, so driver runs always sweep the full inventory)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -259,7 +245,7 @@ object Bench {
             System.err.println(s"bench: A/B adjudicating ${suspects.mkString(",")} vs $classes")
             val table = BenchAB.interleaved(
               new java.io.File("target/scala-2.13/classes").getAbsolutePath,
-              classes, suspects, sfDir, rounds = 2, cpus = cpus)
+              classes, suspects, sfDir, rounds = 2)
             // "ab_" prefix: the side file's ab pairs must NOT match next
             // round's priorMin regex ("q…":[…]) or the adjudication pairs
             // would pollute the retry/suspect triggers the first time the

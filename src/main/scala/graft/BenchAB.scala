@@ -43,7 +43,7 @@ object BenchAB {
   /** One child Bench run of `names` on `classesDir`'s tree; returns
     * query → attempts (seconds; empty on child failure). */
   def runOnce(classesDir: String, names: Seq[String], sfDir: String,
-              label: String, cpus: String): Map[String, Seq[Double]] = {
+              label: String): Map[String, Seq[Double]] = {
     val javaBin = sys.props("java.home") + "/bin/java"
     val runsOut = java.nio.file.Files
       .createTempFile(s"bench_ab_$label", ".json").toString
@@ -54,7 +54,8 @@ object BenchAB {
     val pb = new ProcessBuilder(cmd: _*)
     pb.environment().put("SPARK_GRAFT_ONLY", names.mkString(","))
     pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-    pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+    // both trees run at this JVM's core count, whatever their own default
+    pb.environment().put("SPARK_GRAFT_CPUS", GraftSession.defaultCores.toString)
     pb.environment().put("SPARK_GRAFT_RUNS_OUT", runsOut)
     pb.redirectErrorStream(true)
     val log = java.nio.file.Files
@@ -82,16 +83,16 @@ object BenchAB {
     * time. Returns query → (myMin, otherMin) with -1 for a side that
     * never produced a timing. */
   def interleaved(myClasses: String, otherClasses: String,
-                  names: Seq[String], sfDir: String, rounds: Int,
-                  cpus: String): Map[String, (Double, Double)] = {
+                  names: Seq[String], sfDir: String,
+                  rounds: Int): Map[String, (Double, Double)] = {
     val mine = scala.collection.mutable.Map.empty[String, Seq[Double]]
       .withDefaultValue(Seq.empty)
     val other = scala.collection.mutable.Map.empty[String, Seq[Double]]
       .withDefaultValue(Seq.empty)
     for (r <- 1 to rounds) {
-      runOnce(myClasses, names, sfDir, s"A$r", cpus)
+      runOnce(myClasses, names, sfDir, s"A$r")
         .foreach { case (k, v) => mine(k) = mine(k) ++ v }
-      runOnce(otherClasses, names, sfDir, s"B$r", cpus)
+      runOnce(otherClasses, names, sfDir, s"B$r")
         .foreach { case (k, v) => other(k) = other(k) ++ v }
     }
     def m(s: Seq[Double]) = if (s.isEmpty) -1.0 else s.min
@@ -106,7 +107,6 @@ object BenchAB {
     val rounds = args.lift(2).map(_.toInt).getOrElse(2)
     val sfDir = args.lift(3).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // optional 5th arg: adjudicate two OTHER trees (e.g. last round's vs
     // the round before) without touching the working tree's classes —
     // lets the A/B run while the working tree is being edited/recompiled
@@ -115,7 +115,7 @@ object BenchAB {
       .getOrElse(new java.io.File("target/scala-2.13/classes").getAbsolutePath)
     require(new java.io.File(otherClasses).isDirectory, s"no classes at $otherClasses")
 
-    val table = interleaved(myClasses, otherClasses, names, sfDir, rounds, cpus)
+    val table = interleaved(myClasses, otherClasses, names, sfDir, rounds)
     println(f"${"query"}%-26s ${"this tree"}%10s ${"other tree"}%10s  verdict")
     names.foreach { n =>
       val (a, b) = table(n)

@@ -241,27 +241,12 @@ object DayScale {
     val synthChunks = args.find(_.startsWith("--synth-chunks="))
       .map(_.stripPrefix("--synth-chunks=").toInt).getOrElse(1)
     val ep2Only = args.contains("--ep2-only")
-    // dev-only like Bench/ScaleBench: SPARK_GRAFT_MASTER=local-cluster[…]
-    // runs the day across REAL executor JVMs — at 100× that is the spill
-    // posture (the window sort's working set >> executor memory, so EP3
-    // runs the degrade-to-disk path a production day lives on)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")
-    val spark =
-      if (!master.startsWith("local-cluster")) GraftSession.local()
-      else {
-        val s = GraftSession.wireLocalCluster(org.apache.spark.sql.SparkSession.builder()
-          .master(master)
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.ui.enabled", "false"), master)
-          .getOrCreate()
-        s.sparkContext.setLogLevel("WARN")
-        graft.functions.GraftExtensions.register(s)
-        s
-      }
+    // SPARK_GRAFT_MASTER=local-cluster[…] runs the day across real
+    // executor JVMs — at 100× that is the spill posture (the window
+    // sort's working set >> executor memory, so EP3 runs the
+    // degrade-to-disk path a production day lives on)
+    val spark = GraftSession.start(GraftSession.builder())
+    val master = spark.sparkContext.master
     // task-level spill accounting (reported per stage in the JSON — the
     // 100× evidence that EP3 spilled rather than fit)
     val memSpilled = new java.util.concurrent.atomic.AtomicLong

@@ -102,19 +102,8 @@ object FaultProbe {
 
     val ckDir = new java.io.File("target/fault_ck").getAbsolutePath
     def session(reliable: Boolean): SparkSession = {
-      val master = "local-cluster[2,4,4096]"
-      val b = GraftSession.wireLocalCluster(SparkSession.builder()
-        .master(master)
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false"), master)
-      val s = (if (reliable) b.config(Checkpoints.DirKey, ckDir) else b)
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      graft.functions.GraftExtensions.register(s)
-      s
+      val b = GraftSession.builder("local-cluster[2,4,4096]", 16)
+      GraftSession.start(if (reliable) b.config(Checkpoints.DirKey, ckDir) else b)
     }
 
     case class Run(outcome: String, fp: Option[(Long, Long)], secs: Double,

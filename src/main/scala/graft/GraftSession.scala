@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Central SparkSession factory so Bench/Verify/tests/jobs share one
-  * scale-aware configuration.
+/** The single SparkSession factory: Bench, Verify, the dev mains, the
+  * test suites and the benchmark harness all build through [[builder]],
+  * so they share one scale-aware configuration. It is the only reader of
+  * `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_MASTER` and `SPARK_GRAFT_EXECUTOR_MEM`.
   *
   * Design notes (100 TB north star):
   *  - `spark.sql.shuffle.partitions` is sized to the local core count here;
@@ -25,14 +27,34 @@ object GraftSession {
     * value. Test suites alias this same object (SparkTestBase). */
   val sessionConfLock: Object = new Object
 
-  def local(cores: String = "*", shufflePartitions: Option[Int] = None): SparkSession = {
-    val parts = shufflePartitions.getOrElse(
-      if (cores == "*") Runtime.getRuntime.availableProcessors() else cores.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
+  /** Cores for the default master and shuffle width: `SPARK_GRAFT_CPUS`,
+    * else the host's processor count. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** `SPARK_GRAFT_MASTER`, else `local[defaultCores]`. A
+    * `local-cluster[n,c,mem]` master runs the same work on real executor
+    * JVMs (task/broadcast serialization, shuffle transport, classloader
+    * isolation) — the multi-JVM proof mode behind MULTIJVM_r10.json. */
+  private def defaultMaster: String =
+    sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$defaultCores]")
+
+  /** The one session shape every entry point runs on: the shared conf
+    * plus [[graft.functions.GraftExtensions]] installed at construction.
+    * Callers add only the conf they vary, then [[start]] the result.
+    *
+    * A `local-cluster` master spawns executor JVMs from SPARK_HOME that
+    * know nothing of sbt's classpath, so the builder ships the graft
+    * classes and the JDK17 module opens; the caller must also export
+    * SPARK_SCALA_VERSION=2.13 (the in-process executor launcher cannot
+    * infer it outside the shell scripts). */
+  def builder(master: String = defaultMaster,
+              shufflePartitions: Int = defaultCores): SparkSession.Builder = {
+    val b = SparkSession.builder()
+      .master(master)
       .appName("graft")
       .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", parts.toString)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -41,10 +63,42 @@ object GraftSession {
       // which Spark only reads as a raw long (SPARK-40819). Tables.events()
       // rebuilds a proper TimestampType column from it.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    if (!master.startsWith("local-cluster")) b
+    else {
+      val classDir = new java.io.File("target/scala-2.13/classes").getAbsolutePath
+      val addOpens = Seq(
+        "java.base/java.lang", "java.base/java.lang.invoke",
+        "java.base/java.lang.reflect", "java.base/java.io",
+        "java.base/java.net", "java.base/java.nio",
+        "java.base/java.util", "java.base/java.util.concurrent",
+        "java.base/java.util.concurrent.atomic",
+        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+        "java.base/sun.security.action", "java.base/sun.util.calendar",
+      ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
+      b.config("spark.executor.extraClassPath", classDir)
+        .config("spark.executor.extraJavaOptions", addOpens)
+        .config("spark.executor.memory",
+          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "6g"))
+    }
+  }
+
+  /** getOrCreate a [[builder]] result. `register` is the idempotent
+    * fallback for when getOrCreate hands back an already-running session
+    * that was built without the extensions. */
+  def start(builder: SparkSession.Builder): SparkSession = {
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftExtensions.register(spark)
     spark
+  }
+
+  /** `local[cores]` with one shuffle partition per core unless told
+    * otherwise; the env vars do not apply (the test suites' and the
+    * benchmark harness's session). */
+  def local(cores: String = "*", shufflePartitions: Option[Int] = None): SparkSession = {
+    val parts = shufflePartitions.getOrElse(
+      if (cores == "*") Runtime.getRuntime.availableProcessors() else cores.toInt)
+    start(builder(s"local[$cores]", parts))
   }
 
   /** Per-operator-family shuffle-volume expansion factors for
@@ -86,33 +140,6 @@ object GraftSession {
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     parts
   }
-
-  /** Multi-JVM wiring for a `local-cluster[n,c,mem]` master (the proof
-    * mode behind MULTIJVM_r10.json): executor JVMs are spawned from
-    * SPARK_HOME and know nothing of sbt's classpath, so ship the graft
-    * classes and the JDK17 module opens. No-op for local[n] masters.
-    * The caller must also export SPARK_SCALA_VERSION=2.13 (the
-    * in-process executor launcher cannot infer it outside the shell
-    * scripts). */
-  def wireLocalCluster(builder: SparkSession.Builder, master: String): SparkSession.Builder =
-    if (!master.startsWith("local-cluster")) builder
-    else {
-      val classDir = new java.io.File("target/scala-2.13/classes").getAbsolutePath
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar",
-      ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-      builder
-        .config("spark.executor.extraClassPath", classDir)
-        .config("spark.executor.extraJavaOptions", addOpens)
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "6g"))
-    }
 
   /** Apply the must-have configs to an externally built session (e.g. the
     * driver's own). Runtime-settable confs + function registration only. */

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only harness (ScaleBench's sibling — NOT part of the driver
@@ -33,16 +33,7 @@ object HostScaleBench {
     val k = args.headOption.map(_.toInt).getOrElse(10)
     val baseHosts = args.lift(1).map(_.toInt).getOrElse(20000)
     val docsPerHost = args.lift(2).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftSession.wireLocalCluster(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"), master)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    val spark = GraftSession.start(GraftSession.builder(shufflePartitions = 32))
     import graft.functions.Portable
 
     def hostCol(id: org.apache.spark.sql.Column) =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan archiver (NOT part of the driver contract): write
   * `explain("formatted")` of the named gate entries to
   * `plans/<tag>/<query>_<suffix>.txt` — the optimization-round evidence
@@ -15,14 +13,10 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // fixed at 4 cores, not the host's: the archived plans spell out
+    // partition counts, and files from different hosts must diff cleanly
+    val spark = GraftSession.local("4")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftExtensions.register(spark)
     new java.io.File(outDir).mkdirs()
     val sel = SparkEntry.queries.filter { case (k, _) =>
       names.exists(k.startsWith) }

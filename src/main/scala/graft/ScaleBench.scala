@@ -1,18 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Dev-only harness (like ScaleProbe — NOT part of the driver
-  * contract): time the slowest GATE queries themselves at k× sf0.1,
-  * with the operating envelope's partition-scaling rule applied
-  * (README "Operating envelope" #1: shuffle partitions ∝ corpus
-  * factor, `max(32, 32·k/10)`). ScaleProbe validated the rule on the
-  * wide *shapes*; this validates it on the gate queries as deployed —
-  * the evidence that the published per-query numbers extrapolate
-  * ~linearly for the non-iterative entries.
+/** Dev-only harness (NOT part of the driver contract): time the
+  * slowest GATE queries themselves at k× sf0.1, with the operating
+  * envelope's partition-scaling rule applied (README "Operating
+  * envelope" #1: shuffle partitions ∝ corpus factor,
+  * `max(32, 32·k/10)`). It validates the rule on the gate queries as
+  * deployed (the committed SCALE*.json files) — the evidence that the
+  * published per-query numbers extrapolate ~linearly for the
+  * non-iterative entries.
   *
-  * The k× corpus is synthesized as id-offset shards (ScaleProbe's
+  * The k× corpus is synthesized as id-offset shards (graft.Sharding's
   * scaffold): documents get a per-shard text marker (near- not
   * byte-dups), lineitem offsets both join keys (k isolated
   * co-occurrence components), events offsets event/user ids (k× users,
@@ -40,23 +40,12 @@ object ScaleBench {
         SparkEntry.queries.keys.filter(_.contains(frag)).toSeq.sorted)
     else DefaultNames
     val sf = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // dev-only like Verify/Bench: SPARK_GRAFT_MASTER=local-cluster[…]
-    // runs the SCALE sweep across real executor JVMs — the
-    // scale × multi-JVM intersection (netty shuffle carrying
-    // scale-sized candidate-pair/iterative workloads) that neither
-    // MULTIJVM (gate-scale) nor the local[n] sweeps exercise alone
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftSession.wireLocalCluster(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"), master)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    // SPARK_GRAFT_MASTER=local-cluster[…] runs the SCALE sweep across
+    // real executor JVMs — the scale × multi-JVM intersection (netty
+    // shuffle carrying scale-sized candidate-pair/iterative workloads)
+    // that neither MULTIJVM (gate-scale) nor the local[n] sweeps
+    // exercise alone
+    val spark = GraftSession.start(GraftSession.builder(shufflePartitions = 32))
 
     // ---- synthesize the k× dir (graft.Sharding — the one scaffold all
     // scale harnesses share, keeping their published numbers comparable)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only harness: time a subset of gate queries (args) on a given SF
   * dir, optionally printing the formatted plan. Not part of the driver
   * contract. Usage: runMain graft.Scratch <sfDir> [explain] q43 q45 ... */
@@ -10,17 +8,7 @@ object Scratch {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val explain = args.contains("explain")
     val names = args.drop(1).filterNot(_ == "explain")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PARTS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    val spark = GraftSession.start(GraftSession.builder())
     // SPARK_GRAFT_STAGES=1 → per-stage wall/task summary after each run,
     // plus a job counter (nJobs/jobWall since the last read) — the
     // fixed-overhead signal for tiny-data chains where no single stage

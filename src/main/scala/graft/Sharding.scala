@@ -4,12 +4,11 @@ import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 
 /** The ONE k×-corpus synthesis scaffold shared by every scale harness
-  * (ScaleProbe, ScaleBench, PairProbe): id-offset shards with a
-  * deterministic per-shard perturbation so cross-shard rows are near-
-  * not byte-dups. Shared on purpose — the harnesses' published numbers
-  * (SCALE10/SCALE30, probe notes) are only comparable if they scale
-  * the SAME synthetic corpus; a scaffold tweak in one file must reach
-  * all of them. */
+  * (ScaleBench, AdaptiveGate): id-offset shards with a deterministic
+  * per-shard perturbation so cross-shard rows are near- not byte-dups.
+  * Shared on purpose — the published numbers (the committed SCALE*.json
+  * files) are only comparable if they scale the SAME synthetic corpus;
+  * a scaffold tweak here reaches every harness. */
 object Sharding {
 
   /** k shards of `base`: shard s offsets `idCol` by `s × span` and
@@ -56,8 +55,8 @@ object Sharding {
     *
     * Why this exists alongside [[documentsDistinct]]: token-salting
     * (`s0_` prefixes) preserves token-level structure but DISTORTS
-    * character-level statistics — measured at 2× (GraphSpanProbe): the
-    * winnow 16-gram vocabulary collapses ×0.2 (salt floods the grams)
+    * character-level statistics — measured at 2× (COVERAGE.md r10 #5):
+    * the winnow 16-gram vocabulary collapses ×0.2 (salt floods the grams)
     * and text length grows ~60% (3 salt chars per token), so span-dedup
     * inputs grow super-linearly under that scaffold — an artifact, not
     * an operator property. Character rotation preserves lengths and

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fault-probe STRUCTURED STREAMING state (the gap FAULT_r11/r13's
@@ -55,20 +55,10 @@ object StreamFaultProbe {
     val work = new java.io.File("target/stream_fault").getAbsolutePath
     deleteRec(new java.io.File(work))
 
-    val master = "local-cluster[2,4,4096]"
-    val spark = GraftSession.wireLocalCluster(SparkSession.builder()
-      .master(master)
-      // state-sized shuffle width (the StreamingOps rationale): every
-      // stateful operator opens one store per shuffle partition per
-      // micro-batch
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"), master)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    // state-sized shuffle width (the StreamingOps rationale): every
+    // stateful operator opens one store per shuffle partition per
+    // micro-batch
+    val spark = GraftSession.start(GraftSession.builder("local-cluster[2,4,4096]", 8))
     import spark.implicits._
 
     // ---- zones (written once; every run streams the same bytes).

@@ -1,34 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    // optional 3rd arg (dev only): comma-separated query-name substrings
-    // to dump — the driver always calls with exactly two args
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, Seq.empty[String])
-      case Array(s, o, f) => (s, o, f.split(',').toSeq)
+  /** (sfDir, outDir, query-name filter); None for any other arg count.
+    * The optional 3rd arg (dev only) is comma-separated query-name
+    * substrings to dump — the driver always calls with exactly two. */
+  def parseArgs(args: Array[String]): Option[(String, String, Seq[String])] =
+    args match {
+      case Array(s, o)    => Some((s, o, Seq.empty[String]))
+      case Array(s, o, f) => Some((s, o, f.split(',').toSeq))
+      case _              => None
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[2,8,8192] runs the same gate on
-    // REAL executor JVMs (task/broadcast serialization, shuffle
-    // transport, classloader isolation) — the multi-JVM proof pass.
-    // Default remains in-process local[n] (the driver's contract).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = GraftSession.wireLocalCluster(builder, master).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, outDir, only) = parseArgs(args).getOrElse {
+      System.err.println("usage: Verify <sfDir> <outDir> [queryNameSubstrings,...]")
+      sys.exit(2)
+    }
+    val spark = GraftSession.start(GraftSession.builder())
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) =>

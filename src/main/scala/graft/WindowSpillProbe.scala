@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * disk. Two passes over the same day-scale positions parquet
   * (DayScale EP2 output, ~17.5M rows at 1×):
   *
-  *   1. roomy reference: local[8], 32 shuffle partitions, default
-  *      memory — the no-spill fingerprint;
+  *   1. roomy reference: the default master (`local[cores]`), 32
+  *      shuffle partitions, default memory — the no-spill fingerprint;
   *   2. spill pass: local-cluster[2,4,<workerMb>] executor JVMs with
   *      spark.memory.fraction starved (0.08) and 4 shuffle
   *      partitions, so each WindowExec sort faces millions of rows
@@ -48,19 +48,10 @@ object WindowSpillProbe {
           col("distancia"), col("velocidade_media"))
     }
 
-    def builder(master: String, parts: Int) =
-      GraftSession.wireLocalCluster(SparkSession.builder()
-        .master(master)
-        .config("spark.sql.shuffle.partitions", parts.toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false"), master)
-
     // pass 1 — roomy
     val (refFp, refSec) = {
-      val s = builder("local[8]", 32).getOrCreate()
+      val s = GraftSession.start(GraftSession.builder(shufflePartitions = 32))
       try {
-        s.sparkContext.setLogLevel("WARN")
         val t0 = System.nanoTime()
         val fp = SpillProbe.fingerprint(hopsDf(s))
         (fp, (System.nanoTime() - t0) / 1e9)
@@ -72,11 +63,10 @@ object WindowSpillProbe {
     val memSpilled = new java.util.concurrent.atomic.AtomicLong
     val diskSpilled = new java.util.concurrent.atomic.AtomicLong
     val (spFp, spSec) = {
-      val s = builder(s"local-cluster[2,4,$workerMb]", 4)
-        .config("spark.memory.fraction", memFraction.toString)
-        .getOrCreate()
+      val s = GraftSession.start(
+        GraftSession.builder(s"local-cluster[2,4,$workerMb]", 4)
+          .config("spark.memory.fraction", memFraction.toString))
       try {
-        s.sparkContext.setLogLevel("WARN")
         s.sparkContext.addSparkListener(new SparkListener {
           override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
             val m = te.taskMetrics

@@ -240,7 +240,7 @@ object Dedup {
     // xor+bit_count on the join output, while distinct is a full
     // shuffle of every candidate row — and candidates outnumber
     // surviving edges ~56:1 at the 100× measurement (2.9B vs 52M,
-    // PairProbe). Filtering first shrinks the distinct's shuffle by
+    // SCALE100_r09.json "pair_probe"). Filtering first shrinks the distinct's shuffle by
     // that factor; multi-band duplicates of a surviving pair agree on
     // hamming, so the post-distinct row set is identical.
     a.join(b, Seq("band", "bv")).filter(col("id_a") < col("id_b"))

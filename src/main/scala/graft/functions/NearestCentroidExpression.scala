@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * Why native: the composed form is `k` interpreted higher-order-
   * function folds per row (HOFs are CodegenFallback) — at corpus-scaled
   * centroid counts the assignment becomes interpreter-bound, not
-  * arithmetic-bound (measured 141 s for 200k×800×64 at local[32];
+  * arithmetic-bound (measured 141 s for 200k×800×64 on 32 local cores;
   * the compiled loop does the identical 10¹⁰ integer ops in seconds).
   * The centroid MODEL rides along as a reference object — evaluated
   * once, flattened to one primitive long[] for the hot loop.

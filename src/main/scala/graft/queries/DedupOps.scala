@@ -107,10 +107,9 @@ object DedupOps {
         .agg(count(lit(1)).as("shared_bands")))
   }
 
-  /** Dev-probe surface (graft.PairProbe, ShardingSpec): q42's distinct
-    * candidate PAIRS (id_a < id_b) over an arbitrary (doc_id, text)
-    * frame — the CC chain's true input, exposed as a frame so harnesses
-    * can measure its size AND assert where the pairs fall (e.g. zero
+  /** q42's distinct candidate PAIRS (id_a < id_b) over an arbitrary
+    * (doc_id, text) frame — the CC chain's true input, exposed as a
+    * frame so ShardingSpec can assert where the pairs fall (e.g. zero
     * cross-shard pairs under Sharding.documentsDistinct). */
   def lshCandidatePairs(s: SparkSession, docsIn: org.apache.spark.sql.DataFrame): DataFrame = {
     val docs = spread(s, docsIn)
@@ -125,43 +124,6 @@ object DedupOps {
     scope.materializeAndRelease(
       a.join(b, Seq("band", "bh")).filter(col("id_a") < col("id_b"))
         .select(col("id_a"), col("id_b")).distinct())
-  }
-
-  /** MinHash-LSH candidate-pair SIZE at k× shardings, measured rather
-    * than argued (q42's banding — a PROXY for dedup-chain input growth;
-    * the CC chain q47/q59 actually consumes q45's SIMHASH pairs, see
-    * simhashPairStats). */
-  def lshCandidatePairCount(s: SparkSession, docsIn: org.apache.spark.sql.DataFrame): Long =
-    lshCandidatePairs(s, docsIn).count()
-
-  /** The CC chain's TRUE input, measured: q45's simhash layout applied
-    * to an arbitrary (probe-synthesized) corpus. Returns (bits chosen
-    * by the adaptive rule, banded candidate pairs = Σ_buckets C(n,2)
-    * computed WITHOUT running the self-join — this is the volume the
-    * join shuffles — and surviving hamming-≤2 edges). */
-  def simhashPairStats(s: SparkSession,
-                       docsIn: org.apache.spark.sql.DataFrame): (Int, Long, Long) = {
-    val bits = Dedup.simhashBitsFor(docsIn.count())
-    val bands = 3
-    val width = bits / bands
-    val scope = graft.CacheScope.scoped()
-    val sig = scope.cache(
-      Dedup.withSimhash(spread(s, docsIn), col("text"), bits, "simhash")
-        .select(col("doc_id"), col("simhash")))
-    val bandVals = (0 until bands).map { j =>
-      shiftrightunsigned(col("simhash"), j * width) % (1L << width)
-    }
-    val candidates = sig
-      .select(posexplode_outer(array(bandVals: _*)).as(Seq("band", "bv")))
-      .groupBy(col("band"), col("bv")).count()
-      // n·(n−1) summed as longs (Column./ is double division), halved last;
-      // coalesce: sum over zero rows is SQL NULL on an empty corpus
-      .agg(coalesce(sum(col("count") * (col("count") - 1)), lit(0L)))
-      .head().getLong(0) / 2
-    val edges = scope.materializeAndRelease(
-      Dedup.simhashBandedPairs(spread(s, docsIn), "doc_id", col("text"),
-        bits, bands, maxHamming = 2, scope = scope)).count()
-    (bits, candidates, edges)
   }
 
   val q42Sql: String = {

@@ -34,6 +34,26 @@ class GraftSessionSpec extends SparkTestBase {
     assert(plan.contains("AsOfMergeJoin"), s"native exec missing:\n$plan")
   }
 
+  test("local: partitions = cores, UTC, AQE, nanosAsLong, UI off, rule installed once") {
+    SparkTestBase.sessionConfLock.synchronized {
+      try {
+        // getOrCreate hands back the shared session and applies the
+        // runtime confs, so another core count must show up as the width
+        assert(GraftSession.local("3").conf.get("spark.sql.shuffle.partitions") == "3")
+        val s = GraftSession.local("4")
+        assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+        assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+        assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
+        assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+        assert(s.sparkContext.getConf.get("spark.ui.enabled") == "false")
+        val rule = graft.plans.HaversineBoundingBox
+        assert(s.sessionState.optimizer.extendedOperatorOptimizationRules.count(_ == rule) == 1)
+        graft.functions.GraftExtensions.register(s)
+        assert(!s.experimental.extraOptimizations.contains(rule))
+      } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    }
+  }
+
   test("tuneForInput sizes shuffle partitions from corpus bytes with a core floor") {
     SparkTestBase.sessionConfLock.synchronized {
       val before = spark.conf.get("spark.sql.shuffle.partitions")

@@ -1,17 +1,4 @@
 #!/bin/bash
-# Launch graft.ScaleBench outside sbt (keeps sbt free while it runs).
-# Usage: tools/scalebench.sh <k> [names] ; env: SPARK_DRIVER_MEM, SPARK_GRAFT_KX_ATTEMPTS
-set -e
-cd /root/repo
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-exec java -Xmx${SPARK_DRIVER_MEM:-8g} $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.ScaleBench "$@"
+# Launch graft.ScaleBench outside sbt. Usage: tools/scalebench.sh <k> [names]
+# Env: SPARK_DRIVER_MEM, SPARK_GRAFT_KX_ATTEMPTS.
+exec "$(dirname "$0")/run.sh" ScaleBench "$@"
