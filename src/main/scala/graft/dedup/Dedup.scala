@@ -127,26 +127,6 @@ object Dedup {
 
   // -------------------------------------------------------------- simhash
 
-  /** Per-token 60-bit hashes (precomputed once per row; simhash folds
-    * over this). */
-  private def tokenHashes(text: Column): Column =
-    transform(TextAnalysis.tokens(text), t => Portable.h60(t))
-
-  /** SimHash over the low `bits` bits of the token hashes: bit b of the
-    * result is 1 iff Σ_tokens (2·((h>>b)&1) − 1) > 0. Pure per-row
-    * expression; `bits` ≤ 62 keeps everything in signed-long math for
-    * DuckDB parity. */
-  def simhash(text: Column, bits: Int): Column = {
-    require(bits <= 62, "stay in signed-long math for DuckDB parity")
-    val th = tokenHashes(text)
-    (0 until bits).map { b =>
-      // literal shift per bit keeps everything in exact integer math
-      val bitSum = aggregate(th, lit(0L), (acc, h) =>
-        acc + (shiftrightunsigned(h, b) % 2) * 2 - 1)
-      when(bitSum > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
   /** Staged simhash (same rationale as withMinhashSignature: hash each
     * token once). The per-bit fold is the native Simhash expression —
     * one codegen'd pass accumulating all `bits` counters, vs `bits`

@@ -9,12 +9,14 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native (codegen, single-static-call) forms of the URL algebra in
   * [[graft.text.UrlCanonical]] — same pattern as [[IdnAscii]].
   *
-  * WHY (guide §4, measured r20): the original implementations compose
-  * builtin Columns under [[graft.text.UrlCanonical.let]]-bindings, and
-  * `let` is `element_at(transform(array(v), body), 1)` — a
-  * higher-order function. HOFs have NO codegen: the entire expression
-  * subtree under them is evaluated by the INTERPRETED evaluator, one
-  * tree walk with per-node boxing per row. Canonicalization is the
+  * WHY (guide §4, measured r20): the original implementations (kept as
+  * the reference twins) compose builtin Columns under
+  * [[graft.text.UrlCanonical.let]]-bindings, and `let` is
+  * `element_at(transform(array(v), body), 1)` — a higher-order
+  * function; queries bind with named columns instead, never `let`.
+  * HOFs have NO codegen: the entire expression subtree under them is
+  * evaluated by the INTERPRETED evaluator, one tree walk with per-node
+  * boxing per row. Canonicalization is the
   * single hottest per-row computation in the engine (every link edge,
   * membership key, host grouping and consolidation key pays it — the
   * 32-task zone stages measured 1–2 s/task at sf0.1, ~5–9 ms/doc), so

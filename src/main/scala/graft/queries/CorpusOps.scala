@@ -1,12 +1,12 @@
 package graft.queries
 
 import graft.functions.Fx
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Portable
 import graft.operators.QuotaCap
-import graft.text.{Blocklist, Chunking, Fluency, Fuzzy, Postings}
+import graft.text.{Blocklist, Chunking, Fluency, Fuzzy, HtmlExtract, Postings, UrlCanonical}
 
 /** Corpus-preparation operators over `documents`: sliding-window token
   * chunking (retrieval preprocessing), blocklist screening, per-source
@@ -829,7 +829,6 @@ object CorpusOps {
       .select(
         regexp_extract(col("url"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
         col("payload"))
-    import graft.text.HtmlExtract
     pages
       .select(col("doc_id"),
         HtmlExtract.metaRobotsContents(col("payload")).as("__c"))
@@ -939,7 +938,6 @@ object CorpusOps {
     * level and drop, mirrored in the oracle's survivor set. */
   def q174RobotsDirectives(s: SparkSession, dir: String): DataFrame = {
     val zone = htmlZoneFor(s, dir)
-    import graft.text.HtmlExtract
     val pages = graft.sources.Warc.parseChunksWith(
         s.read.option("lineSep", graft.sources.Warc.Magic).text(zone),
         Nil, repeated = Seq("X-Robots-Tag" -> "__xl"))
@@ -996,6 +994,154 @@ object CorpusOps {
        |FROM fl""".stripMargin
   }
 
+  // ------------------------------------------------ page link signals
+
+  /** Non-hierarchical references (`mailto:`, `javascript:`, `data:` —
+    * a scheme with no '://') are never resolved: they are not crawl
+    * edges, and RFC 3986 §5.2's merge would otherwise treat them as
+    * relative paths. Constant literals (`final val`, inlined at every
+    * use), so no object-init order can splice a null into oracle SQL. */
+  private final val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
+  private final val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
+
+  /** Whether `ref` may be resolved as a crawl reference: it does not
+    * carry a non-hierarchical scheme. */
+  private[queries] def hierarchical(ref: Column): Column =
+    !(ref.rlike(SchemeLike) && !ref.rlike(Hierarchical))
+
+  /** DuckDB twin of [[hierarchical]] over the SQL fragment `ref`. */
+  private[queries] def duckHierarchical(ref: String): String =
+    s"""NOT (regexp_matches($ref, '$SchemeLike')
+       |             AND NOT regexp_matches($ref, '$Hierarchical'))""".stripMargin
+
+  /** An absent, empty or non-hierarchical reference: nothing to resolve. */
+  private def unresolvable(ref: Column): Column =
+    ref.isNull || ref === "" || !hierarchical(ref)
+
+  /** `ref` resolved against the page's effective base `__base` and
+    * canonicalized; NULL when it is [[unresolvable]]. */
+  private def baseResolvedCanon(ref: Column): Column =
+    when(unresolvable(ref), lit(null))
+      .otherwise(UrlCanonical.canonicalize(
+        UrlCanonical.resolve(col("__base"), ref)))
+
+  /** The WARC HTML pages `(doc_id, payload, __url)` with
+    * [[withEffectiveBase]]'s `__base`. The page's own URL is the
+    * q139/q144 messy fixture (deterministic from doc_id): resolution
+    * runs against the RAW spelling — variant case, IDN hosts, ports,
+    * dot-segment-bearing directories — and canonicalization collapses
+    * the results, exactly the real-crawl order of operations. */
+  private[queries] def pagesWithBase(s: SparkSession, dir: String): DataFrame =
+    graft.sources.Warc.readExactClean(s, htmlZoneFor(s, dir))
+      .select(
+        regexp_extract(col("url"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
+        col("payload"))
+      .select(col("doc_id"), col("payload"), messyUrlCol.as("__url"))
+      .transform(withEffectiveBase)
+
+  /** Adds `__base`, the page's RESOLUTION BASE — RFC 3986 §5.1's
+    * precedence: an embedded `<base href>` comes FIRST, the retrieval
+    * URI `__url` is the fallback. The base href is itself a reference
+    * (§5.1: a RELATIVE base resolves against the retrieval URI),
+    * entity-decoded like any attribute; an empty or non-hierarchical
+    * (`mailto:`) base is ignored. `__url` stays the SOURCE endpoint (a
+    * base changes where links point, not where the page lives).
+    *
+    * Values used more than once are bound as named columns: the raw
+    * href `__bh0` (read three times by [[HtmlExtract.decodeEntities]])
+    * and the decoded `__bh` (read five times by `__base`).
+    * CollapseProject keeps a non-cheap column that is referenced more
+    * than once in its own Project, so each is computed once per row
+    * inside whole-stage codegen. (A higher-order-function binding would
+    * force the whole subtree, native URL calls included, through the
+    * interpreted evaluator.) */
+  private[queries] def withEffectiveBase(pages: DataFrame): DataFrame =
+    pages
+      .withColumn("__bh0", HtmlExtract.baseHref(col("payload")))
+      .withColumn("__bh", HtmlExtract.decodeEntities(col("__bh0")))
+      .withColumn("__base", when(unresolvable(col("__bh")), col("__url"))
+        .otherwise(UrlCanonical.resolve(col("__url"), col("__bh"))))
+
+  /** Adds the `<meta http-equiv="refresh">` signal (q175): the delay
+    * `refresh_secs` and `refresh_target_canon`, the target
+    * entity-decoded, resolved against `__base` and canonicalized. */
+  private[queries] def withRefreshSignal(pages: DataFrame): DataFrame =
+    pages
+      .withColumn("__rc", HtmlExtract.metaRefreshContent(col("payload")))
+      // extract with the Column API, cast via expr on the extracted
+      // column — regex literals inside expr() hit SQL string escaping
+      .withColumn("__secs", regexp_extract(col("__rc"), "^\\s*([0-9]{1,7})", 1))
+      .withColumn("refresh_secs", expr("try_cast(__secs AS BIGINT)"))
+      .withColumn("__t", HtmlExtract.decodeEntities(trim(
+        regexp_extract(col("__rc"), "(?is)[;,]\\s*url\\s*=\\s*(.+)$", 1))))
+      .withColumn("refresh_target_canon", baseResolvedCanon(col("__t")))
+
+  /** Adds the `<link rel=canonical>` signal (q172): `canonical_canon`,
+    * the declared target entity-decoded, resolved against `__base` and
+    * canonicalized. */
+  private[queries] def withCanonicalSignal(pages: DataFrame): DataFrame =
+    pages
+      .withColumn("__ch0", HtmlExtract.canonicalHref(col("payload")))
+      .withColumn("__ch", HtmlExtract.decodeEntities(col("__ch0")))
+      .withColumn("canonical_canon", baseResolvedCanon(col("__ch")))
+
+  /** Oracle twin of [[withEffectiveBase]] over `hin`, `mk` and `entmap`
+    * → `ebase (doc_id, url)`. */
+  private[queries] def duckEbaseCtes: String =
+    s"""bh1 AS (
+       |  SELECT doc_id,
+       |    ${HtmlExtract.duckEntities(HtmlExtract.duckBaseHref("html"))} AS bh
+       |  FROM hin, entmap),
+       |bri AS (
+       |  SELECT b.doc_id, mk.url AS base, b.bh AS ref
+       |  FROM bh1 b JOIN mk ON b.doc_id = mk.doc_id
+       |  WHERE b.bh IS NOT NULL AND b.bh <> ''
+       |    AND ${duckHierarchical("b.bh")}),
+       |${UrlCanonical.duckResolveCtes("bri", "doc_id", "eb")},
+       |ebase AS (
+       |  SELECT mk.doc_id, coalesce(eb4.target, mk.url) AS url
+       |  FROM mk LEFT JOIN eb4 ON mk.doc_id = eb4.doc_id)""".stripMargin
+
+  /** Oracle twin of [[withRefreshSignal]] over `hin` and `ebase` →
+    * `${rf}1 (doc_id, refresh_secs, t)` + `tc4 (doc_id, canon)`. */
+  private[queries] def duckRefreshCtes(
+      rf: String, idn: Seq[(String, String)]): String =
+    s"""${rf}0 AS (
+       |  SELECT doc_id,
+       |    ${HtmlExtract.duckMetaRefreshContent("html")} AS rc
+       |  FROM hin),
+       |${rf}1 AS (
+       |  SELECT r.doc_id,
+       |    try_cast(regexp_extract(r.rc, '^\\s*([0-9]{1,7})', 1) AS BIGINT)
+       |      AS refresh_secs,
+       |    ${HtmlExtract.duckEntities(
+            "trim(regexp_extract(r.rc, '(?is)[;,]\\s*url\\s*=\\s*(.+)$', 1))")} AS t
+       |  FROM ${rf}0 r, entmap),
+       |tri AS (
+       |  SELECT r.doc_id, e.url AS base, r.t AS ref
+       |  FROM ${rf}1 r JOIN ebase e ON r.doc_id = e.doc_id
+       |  WHERE r.t IS NOT NULL AND r.t <> ''
+       |    AND ${duckHierarchical("r.t")}),
+       |${UrlCanonical.duckResolveCtes("tri", "doc_id", "tv")},
+       |ttin AS (SELECT doc_id, target AS url FROM tv4),
+       |${UrlCanonical.duckCanonCtes("ttin", "doc_id", idn, "tc")}""".stripMargin
+
+  /** Oracle twin of [[withCanonicalSignal]] over `hin` and `ebase` →
+    * `cx4 (doc_id, canon)`. */
+  private[queries] def duckCanonicalCtes(idn: Seq[(String, String)]): String =
+    s"""ch0 AS (
+       |  SELECT doc_id,
+       |    ${HtmlExtract.duckEntities(HtmlExtract.duckCanonicalHref("html"))} AS ch
+       |  FROM hin, entmap),
+       |cri AS (
+       |  SELECT c.doc_id, e.url AS base, c.ch AS ref
+       |  FROM ch0 c JOIN ebase e ON c.doc_id = e.doc_id
+       |  WHERE c.ch IS NOT NULL AND c.ch <> ''
+       |    AND ${duckHierarchical("c.ch")}),
+       |${UrlCanonical.duckResolveCtes("cri", "doc_id", "cn")},
+       |ctin AS (SELECT doc_id, target AS url FROM cn4),
+       |${UrlCanonical.duckCanonCtes("ctin", "doc_id", idn, "cx")}""".stripMargin
+
   // ------------------------- q175 meta-refresh redirects (r18)
 
   /** q175 (r18, beyond plan): the CLIENT-SIDE redirect channel —
@@ -1007,38 +1153,8 @@ object CorpusOps {
     * EFFECTIVE base (composes with `<base href>`), entity-decoded;
     * attribute order and directive case are free; name-only metas
     * (the q170 fixtures) never count. Map-only after the zone read. */
-  def q175MetaRefresh(s: SparkSession, dir: String): DataFrame = {
-    val zone = htmlZoneFor(s, dir)
-    import graft.text.{HtmlExtract, UrlCanonical}
-    val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-    val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
-    graft.sources.Warc.readExactClean(s, zone)
-      .select(
-        regexp_extract(col("url"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
-        col("payload"))
-      .select(col("doc_id"), col("payload"), messyUrlCol.as("__url"))
-      .withColumn("__base", UrlCanonical.let(
-          HtmlExtract.decodeEntities(HtmlExtract.baseHref(col("payload")))) { bh =>
-        UrlCanonical.let(col("__url")) { u =>
-          when(bh.isNull || bh === "" ||
-              (bh.rlike(SchemeLike) && !bh.rlike(Hierarchical)), u)
-            .otherwise(UrlCanonical.resolve(u, bh))
-        }
-      })
-      .withColumn("__rc", HtmlExtract.metaRefreshContent(col("payload")))
-      // extract with the Column API, cast via expr on the extracted
-      // column — regex literals inside expr() hit SQL string escaping
-      .withColumn("__secs", regexp_extract(col("__rc"), "^\\s*([0-9]{1,7})", 1))
-      .withColumn("refresh_secs", expr("try_cast(__secs AS BIGINT)"))
-      .withColumn("__t", HtmlExtract.decodeEntities(trim(
-        regexp_extract(col("__rc"), "(?is)[;,]\\s*url\\s*=\\s*(.+)$", 1))))
-      .withColumn("refresh_target_canon",
-        UrlCanonical.let(col("__t")) { t =>
-          when(t.isNull || t === "" ||
-              (t.rlike(SchemeLike) && !t.rlike(Hierarchical)), lit(null))
-            .otherwise(UrlCanonical.canonicalize(
-              UrlCanonical.resolve(col("__base"), t)))
-        })
+  def q175MetaRefresh(s: SparkSession, dir: String): DataFrame =
+    withRefreshSignal(pagesWithBase(s, dir))
       .withColumn("self_canon", UrlCanonical.canonicalize(col("__url")))
       .withColumn("is_redirect",
         coalesce(col("refresh_secs") === 0L, lit(false)) &&
@@ -1048,50 +1164,14 @@ object CorpusOps {
           .otherwise(col("self_canon")))
       .select(col("doc_id"), col("refresh_secs"), col("refresh_target_canon"),
         col("self_canon"), col("is_redirect"), col("consolidation_key"))
-  }
 
   val q175Sql: String = {
     val idn = Seq("bücher" -> "xn--bcher-kva")
-    import graft.text.{HtmlExtract, UrlCanonical}
-    val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-    val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
     s"""WITH ${HtmlExtract.duckEntmapCte},
        |$htmlInCtes,
        |$messyUrlMkCte,
-       |bh1 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckBaseHref("html"))} AS bh
-       |  FROM hin, entmap),
-       |bri AS (
-       |  SELECT b.doc_id, mk.url AS base, b.bh AS ref
-       |  FROM bh1 b JOIN mk ON b.doc_id = mk.doc_id
-       |  WHERE b.bh IS NOT NULL AND b.bh <> ''
-       |    AND NOT (regexp_matches(b.bh, '$SchemeLike')
-       |             AND NOT regexp_matches(b.bh, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("bri", "doc_id", "eb")},
-       |ebase AS (
-       |  SELECT mk.doc_id, coalesce(eb4.target, mk.url) AS url
-       |  FROM mk LEFT JOIN eb4 ON mk.doc_id = eb4.doc_id),
-       |rc0 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckMetaRefreshContent("html")} AS rc
-       |  FROM hin),
-       |rc1 AS (
-       |  SELECT r.doc_id,
-       |    try_cast(regexp_extract(r.rc, '^\\s*([0-9]{1,7})', 1) AS BIGINT)
-       |      AS refresh_secs,
-       |    ${HtmlExtract.duckEntities(
-            "trim(regexp_extract(r.rc, '(?is)[;,]\\s*url\\s*=\\s*(.+)$', 1))")} AS t
-       |  FROM rc0 r, entmap),
-       |tri AS (
-       |  SELECT r.doc_id, e.url AS base, r.t AS ref
-       |  FROM rc1 r JOIN ebase e ON r.doc_id = e.doc_id
-       |  WHERE r.t IS NOT NULL AND r.t <> ''
-       |    AND NOT (regexp_matches(r.t, '$SchemeLike')
-       |             AND NOT regexp_matches(r.t, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("tri", "doc_id", "tv")},
-       |ttin AS (SELECT doc_id, target AS url FROM tv4),
-       |${UrlCanonical.duckCanonCtes("ttin", "doc_id", idn, "tc")},
+       |$duckEbaseCtes,
+       |${duckRefreshCtes("rc", idn)},
        |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")}
        |SELECT h.doc_id, r.refresh_secs, tc4.canon AS refresh_target_canon,
        |  s4.canon AS self_canon,
@@ -1308,61 +1388,27 @@ object CorpusOps {
     * channel's read level); q172/q175 keep their own zone reads and
     * are unchanged. */
   def q177ConsolidationKey(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.{HtmlExtract, UrlCanonical}
-    val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-    val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
     val (pages, resolved) = redirectResolved(s, dir)
-    val sig = pages
-      .withColumn("__base", UrlCanonical.let(
-          HtmlExtract.decodeEntities(HtmlExtract.baseHref(col("payload")))) { bh =>
-        UrlCanonical.let(col("__url")) { u =>
-          when(bh.isNull || bh === "" ||
-              (bh.rlike(SchemeLike) && !bh.rlike(Hierarchical)), u)
-            .otherwise(UrlCanonical.resolve(u, bh))
-        }
-      })
-      .withColumn("__rc", HtmlExtract.metaRefreshContent(col("payload")))
-      .withColumn("__secs", regexp_extract(col("__rc"), "^\\s*([0-9]{1,7})", 1))
-      .withColumn("refresh_secs", expr("try_cast(__secs AS BIGINT)"))
-      .withColumn("__t", HtmlExtract.decodeEntities(trim(
-        regexp_extract(col("__rc"), "(?is)[;,]\\s*url\\s*=\\s*(.+)$", 1))))
-      .withColumn("__rt",
-        UrlCanonical.let(col("__t")) { t =>
-          when(t.isNull || t === "" ||
-              (t.rlike(SchemeLike) && !t.rlike(Hierarchical)), lit(null))
-            .otherwise(UrlCanonical.canonicalize(
-              UrlCanonical.resolve(col("__base"), t)))
-        })
-      .withColumn("__ch",
-        HtmlExtract.decodeEntities(HtmlExtract.canonicalHref(col("payload"))))
-      .withColumn("__cc",
-        UrlCanonical.let(col("__ch")) { ch =>
-          when(ch.isNull || ch === "" ||
-              (ch.rlike(SchemeLike) && !ch.rlike(Hierarchical)), lit(null))
-            .otherwise(UrlCanonical.canonicalize(
-              UrlCanonical.resolve(col("__base"), ch)))
-        })
+    val sig = pages.transform(withEffectiveBase)
+      .transform(withRefreshSignal).transform(withCanonicalSignal)
     val isRedirect = col("hops") > 0 && !col("is_loop") && col("settled")
     val isRefresh = coalesce(col("refresh_secs") === 0L, lit(false)) &&
-      col("__rt").isNotNull
+      col("refresh_target_canon").isNotNull
     sig.join(resolved, col("self_canon") === col("node"))
       .select(col("doc_id"), col("self_canon"),
         when(isRedirect, lit("redirect"))
           .when(isRefresh, lit("refresh"))
-          .when(col("__cc").isNotNull, lit("canonical"))
+          .when(col("canonical_canon").isNotNull, lit("canonical"))
           .otherwise(lit("self")).as("channel"),
         when(isRedirect, col("final_node"))
-          .when(isRefresh, col("__rt"))
-          .when(col("__cc").isNotNull, col("__cc"))
+          .when(isRefresh, col("refresh_target_canon"))
+          .when(col("canonical_canon").isNotNull, col("canonical_canon"))
           .otherwise(col("self_canon")).as("consolidation_key"))
   }
 
   val q177Sql: String = {
     val idn = Seq("bücher" -> "xn--bcher-kva")
-    import graft.text.{HtmlExtract, UrlCanonical}
     import graft.sources.Warc.{TruncMod, NoLenMod, MagicQuoteMod}
-    val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-    val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
     s"""WITH ${HtmlExtract.duckEntmapCte},
        |$messyUrlMkCte,
        |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
@@ -1371,53 +1417,9 @@ object CorpusOps {
        |  FROM documents
        |  WHERE doc_id % $TruncMod <> 0 AND doc_id % $NoLenMod <> 0
        |    AND doc_id % $MagicQuoteMod <> 0),
-       |bh1 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckBaseHref("html"))} AS bh
-       |  FROM hin, entmap),
-       |bri AS (
-       |  SELECT b.doc_id, mk.url AS base, b.bh AS ref
-       |  FROM bh1 b JOIN mk ON b.doc_id = mk.doc_id
-       |  WHERE b.bh IS NOT NULL AND b.bh <> ''
-       |    AND NOT (regexp_matches(b.bh, '$SchemeLike')
-       |             AND NOT regexp_matches(b.bh, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("bri", "doc_id", "eb")},
-       |ebase AS (
-       |  SELECT mk.doc_id, coalesce(eb4.target, mk.url) AS url
-       |  FROM mk LEFT JOIN eb4 ON mk.doc_id = eb4.doc_id),
-       |rf0 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckMetaRefreshContent("html")} AS rc
-       |  FROM hin),
-       |rf1 AS (
-       |  SELECT r.doc_id,
-       |    try_cast(regexp_extract(r.rc, '^\\s*([0-9]{1,7})', 1) AS BIGINT)
-       |      AS refresh_secs,
-       |    ${HtmlExtract.duckEntities(
-            "trim(regexp_extract(r.rc, '(?is)[;,]\\s*url\\s*=\\s*(.+)$', 1))")} AS t
-       |  FROM rf0 r, entmap),
-       |tri AS (
-       |  SELECT r.doc_id, e.url AS base, r.t AS ref
-       |  FROM rf1 r JOIN ebase e ON r.doc_id = e.doc_id
-       |  WHERE r.t IS NOT NULL AND r.t <> ''
-       |    AND NOT (regexp_matches(r.t, '$SchemeLike')
-       |             AND NOT regexp_matches(r.t, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("tri", "doc_id", "tv")},
-       |ttin AS (SELECT doc_id, target AS url FROM tv4),
-       |${UrlCanonical.duckCanonCtes("ttin", "doc_id", idn, "tc")},
-       |ch0 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckCanonicalHref("html"))} AS ch
-       |  FROM hin, entmap),
-       |cri AS (
-       |  SELECT c.doc_id, e.url AS base, c.ch AS ref
-       |  FROM ch0 c JOIN ebase e ON c.doc_id = e.doc_id
-       |  WHERE c.ch IS NOT NULL AND c.ch <> ''
-       |    AND NOT (regexp_matches(c.ch, '$SchemeLike')
-       |             AND NOT regexp_matches(c.ch, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("cri", "doc_id", "cn")},
-       |ctin AS (SELECT doc_id, target AS url FROM cn4),
-       |${UrlCanonical.duckCanonCtes("ctin", "doc_id", idn, "cx")},
+       |$duckEbaseCtes,
+       |${duckRefreshCtes("rf", idn)},
+       |${duckCanonicalCtes(idn)},
        |${duckRedirectCtes(idn)}
        |SELECT p.doc_id, p.self_canon,
        |  CASE WHEN r.hops > 0 AND NOT r.is_loop AND r.settled
@@ -1461,7 +1463,6 @@ object CorpusOps {
     * over the chunk survivors plus ONE canon-keyed join against the
     * resolved redirect relation. */
   def q180IndexEligibility(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.HtmlExtract
     val (pages, resolved) = redirectResolved(s, dir)
     val flagged = pages
       .withColumn("__x", xRobotsBodiesCol(col("__xl")))
@@ -1535,51 +1536,19 @@ object CorpusOps {
     * — the corpus-build invariant this entry pins. Exchanges: the one
     * key-partitioned aggregate every consolidation pays. */
   def q183ConsolidatedCorpus(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.{HtmlExtract, UrlCanonical}
-    val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-    val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
     val (pages, resolved) = redirectResolved(s, dir)
-    val sig = pages
-      .withColumn("__base", UrlCanonical.let(
-          HtmlExtract.decodeEntities(HtmlExtract.baseHref(col("payload")))) { bh =>
-        UrlCanonical.let(col("__url")) { u =>
-          when(bh.isNull || bh === "" ||
-              (bh.rlike(SchemeLike) && !bh.rlike(Hierarchical)), u)
-            .otherwise(UrlCanonical.resolve(u, bh))
-        }
-      })
-      .withColumn("__rc", HtmlExtract.metaRefreshContent(col("payload")))
-      // extract with the Column API, cast via expr on the extracted
-      // column — regex literals inside expr() hit SQL string escaping
-      .withColumn("__secs", regexp_extract(col("__rc"), "^\\s*([0-9]{1,7})", 1))
-      .withColumn("refresh_secs", expr("try_cast(__secs AS BIGINT)"))
-      .withColumn("__t", HtmlExtract.decodeEntities(trim(
-        regexp_extract(col("__rc"), "(?is)[;,]\\s*url\\s*=\\s*(.+)$", 1))))
-      .withColumn("__rt",
-        UrlCanonical.let(col("__t")) { t =>
-          when(t.isNull || t === "" ||
-              (t.rlike(SchemeLike) && !t.rlike(Hierarchical)), lit(null))
-            .otherwise(UrlCanonical.canonicalize(
-              UrlCanonical.resolve(col("__base"), t)))
-        })
-      .withColumn("__ch",
-        HtmlExtract.decodeEntities(HtmlExtract.canonicalHref(col("payload"))))
-      .withColumn("__cc",
-        UrlCanonical.let(col("__ch")) { ch =>
-          when(ch.isNull || ch === "" ||
-              (ch.rlike(SchemeLike) && !ch.rlike(Hierarchical)), lit(null))
-            .otherwise(UrlCanonical.canonicalize(
-              UrlCanonical.resolve(col("__base"), ch)))
-        })
+    val sig = pages.transform(withEffectiveBase)
+      .transform(withRefreshSignal).transform(withCanonicalSignal)
       .withColumn("__x", xRobotsBodiesCol(col("__xl")))
       .withColumn("__c", HtmlExtract.metaRobotsContents(col("payload")))
+      // ONE reference to __c: the eligibility filter is pushed below
+      // this Project with __noidx inlined
       .withColumn("__noidx",
-        HtmlExtract.metaDirective(col("__c"), "noindex") ||
-          HtmlExtract.metaDirective(col("__c"), "none") ||
+        HtmlExtract.metaDirective(col("__c"), "noindex", "none") ||
           hdrHas(col("__x"), "noindex") || hdrHas(col("__x"), "none"))
     val isRedirect = col("hops") > 0 && !col("is_loop") && col("settled")
     val isRefresh = coalesce(col("refresh_secs") === 0L, lit(false)) &&
-      col("__rt").isNotNull
+      col("refresh_target_canon").isNotNull
     // a NULL status (no channel = 200-class) must stay eligible — a
     // bare !between(...) is NULL there and a filter drops NULLs
     val eligible = !coalesce(col("status").between(300L, 599L), lit(false)) &&
@@ -1589,11 +1558,11 @@ object CorpusOps {
       .select(col("doc_id"),
         when(isRedirect, lit("redirect"))
           .when(isRefresh, lit("refresh"))
-          .when(col("__cc").isNotNull, lit("canonical"))
+          .when(col("canonical_canon").isNotNull, lit("canonical"))
           .otherwise(lit("self")).as("channel"),
         when(isRedirect, col("final_node"))
-          .when(isRefresh, col("__rt"))
-          .when(col("__cc").isNotNull, col("__cc"))
+          .when(isRefresh, col("refresh_target_canon"))
+          .when(col("canonical_canon").isNotNull, col("canonical_canon"))
           .otherwise(col("self_canon")).as("consolidation_key"))
       .groupBy(col("consolidation_key"))
       .agg(min(col("doc_id")).as("rep_doc_id"),
@@ -1603,10 +1572,7 @@ object CorpusOps {
 
   val q183Sql: String = {
     val idn = Seq("bücher" -> "xn--bcher-kva")
-    import graft.text.{HtmlExtract, UrlCanonical}
     import graft.sources.Warc.{TruncMod, NoLenMod, MagicQuoteMod}
-    val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-    val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
     val noidx =
       s"""(${HtmlExtract.duckMetaDirective("c", "noindex")}
          |        OR ${HtmlExtract.duckMetaDirective("c", "none")}
@@ -1620,53 +1586,9 @@ object CorpusOps {
        |  FROM documents
        |  WHERE doc_id % $TruncMod <> 0 AND doc_id % $NoLenMod <> 0
        |    AND doc_id % $MagicQuoteMod <> 0),
-       |bh1 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckBaseHref("html"))} AS bh
-       |  FROM hin, entmap),
-       |bri AS (
-       |  SELECT b.doc_id, mk.url AS base, b.bh AS ref
-       |  FROM bh1 b JOIN mk ON b.doc_id = mk.doc_id
-       |  WHERE b.bh IS NOT NULL AND b.bh <> ''
-       |    AND NOT (regexp_matches(b.bh, '$SchemeLike')
-       |             AND NOT regexp_matches(b.bh, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("bri", "doc_id", "eb")},
-       |ebase AS (
-       |  SELECT mk.doc_id, coalesce(eb4.target, mk.url) AS url
-       |  FROM mk LEFT JOIN eb4 ON mk.doc_id = eb4.doc_id),
-       |rf0 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckMetaRefreshContent("html")} AS rc
-       |  FROM hin),
-       |rf1 AS (
-       |  SELECT r.doc_id,
-       |    try_cast(regexp_extract(r.rc, '^\\s*([0-9]{1,7})', 1) AS BIGINT)
-       |      AS refresh_secs,
-       |    ${HtmlExtract.duckEntities(
-            "trim(regexp_extract(r.rc, '(?is)[;,]\\s*url\\s*=\\s*(.+)$', 1))")} AS t
-       |  FROM rf0 r, entmap),
-       |tri AS (
-       |  SELECT r.doc_id, e.url AS base, r.t AS ref
-       |  FROM rf1 r JOIN ebase e ON r.doc_id = e.doc_id
-       |  WHERE r.t IS NOT NULL AND r.t <> ''
-       |    AND NOT (regexp_matches(r.t, '$SchemeLike')
-       |             AND NOT regexp_matches(r.t, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("tri", "doc_id", "tv")},
-       |ttin AS (SELECT doc_id, target AS url FROM tv4),
-       |${UrlCanonical.duckCanonCtes("ttin", "doc_id", idn, "tc")},
-       |ch0 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckCanonicalHref("html"))} AS ch
-       |  FROM hin, entmap),
-       |cri AS (
-       |  SELECT c.doc_id, e.url AS base, c.ch AS ref
-       |  FROM ch0 c JOIN ebase e ON c.doc_id = e.doc_id
-       |  WHERE c.ch IS NOT NULL AND c.ch <> ''
-       |    AND NOT (regexp_matches(c.ch, '$SchemeLike')
-       |             AND NOT regexp_matches(c.ch, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("cri", "doc_id", "cn")},
-       |ctin AS (SELECT doc_id, target AS url FROM cn4),
-       |${UrlCanonical.duckCanonCtes("ctin", "doc_id", idn, "cx")},
+       |$duckEbaseCtes,
+       |${duckRefreshCtes("rf", idn)},
+       |${duckCanonicalCtes(idn)},
        |${duckRedirectCtes(idn)},
        |el0 AS (
        |  SELECT doc_id, $duckXrtList AS xl FROM hin),

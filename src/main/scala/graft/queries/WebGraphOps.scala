@@ -27,60 +27,14 @@ object WebGraphOps {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Non-hierarchical references (`mailto:`, `javascript:`, `data:` —
-    * a scheme with no '://') are screened out BEFORE resolution: they
-    * are not crawl edges, and §5.2's merge would otherwise treat them
-    * as relative paths. Mirrored verbatim in the oracle. */
-  private val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-  private val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
+  import CorpusOps.{duckCanonicalCtes, duckEbaseCtes, duckHierarchical,
+    hierarchical, pagesWithBase, withCanonicalSignal}
 
   /** The outlink-edge relation over the per-dir HTML WARC zone:
     * (doc_id, link_idx, href, src_canon, dst_canon). `link_idx` is the
     * href's position among ALL extracted targets (pre-screen, so
     * indices are stable); `href` is the entity-DECODED attribute value
     * (what a browser resolves); both endpoints are canonical. */
-  /** The WARC HTML pages with their RESOLUTION BASE attached — RFC 3986
-    * §5.1's precedence (VERDICT r17 weak #1): an embedded `<base href>`
-    * comes FIRST, the retrieval URI is the fallback. The base href is
-    * itself a reference (§5.1: a RELATIVE base resolves against the
-    * retrieval URI), entity-decoded like any attribute; an empty or
-    * non-hierarchical (`mailto:`) base is ignored. The page's own URL
-    * is the q139/q144 messy fixture (deterministic from doc_id):
-    * resolution runs against the RAW spelling — variant case, IDN
-    * hosts, ports, dot-segment-bearing directories — and
-    * canonicalization collapses the results, exactly the real-crawl
-    * order of operations. `__url` stays the retrieval URI (the SOURCE
-    * endpoint — a base changes where links point, not where the page
-    * lives); `__base` is the effective resolution base. */
-  private def pagesWithBase(s: SparkSession, dir: String): DataFrame = {
-    val zone = CorpusOps.htmlZoneFor(s, dir)
-    graft.sources.Warc.readExactClean(s, zone)
-      .select(
-        regexp_extract(col("url"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
-        col("payload"))
-      .select(col("doc_id"), col("payload"),
-        CorpusOps.messyUrlCol.as("__url"))
-      .withColumn("__base",
-        effectiveBase(col("__url"),
-          HtmlExtract.baseHref(col("payload"))))
-  }
-
-  /** `coalesce`-style §5.1.1 base selection, LET-BOUND so the decoded
-    * base-href subtree is built once, not once per predicate (Column
-    * vals substitute textually — the UrlCanonical.let discipline). */
-  private def effectiveBase(url: Column, rawBase: Column): Column =
-    UrlCanonical.let(HtmlExtract.decodeEntities(rawBase)) { bh =>
-      UrlCanonical.let(url) { u =>
-        when(bh.isNull || bh === "" ||
-            (bh.rlike(SchemeLike) && !bh.rlike(Hierarchical)), u)
-          .otherwise(UrlCanonical.resolve(u, bh))
-      }
-    }
-
-  /** Keep only crawlable references: not a non-hierarchical scheme. */
-  private def hierarchicalOnly(href: Column): Column =
-    !(href.rlike(SchemeLike) && !href.rlike(Hierarchical))
-
   private[queries] def outlinkEdges(s: SparkSession, dir: String): DataFrame =
     pagesWithBase(s, dir)
       .select(col("doc_id"), col("__base"),
@@ -89,7 +43,7 @@ object WebGraphOps {
           .as(Seq("link_idx", "__raw")))
       .filter(col("__raw").isNotNull)
       .withColumn("href", HtmlExtract.decodeEntities(col("__raw")))
-      .filter(hierarchicalOnly(col("href")))
+      .filter(hierarchical(col("href")))
       .select(col("doc_id"), col("link_idx").cast("long").as("link_idx"),
         col("href"), col("src_canon"),
         UrlCanonical.canonicalize(
@@ -288,7 +242,7 @@ object WebGraphOps {
       .filter(col("__a").isNotNull)
       .withColumn("href",
         HtmlExtract.decodeEntities(HtmlExtract.anchorHref(col("__a"))))
-      .filter(hierarchicalOnly(col("href")))
+      .filter(hierarchical(col("href")))
       .select(col("doc_id"), col("link_idx").cast("long").as("link_idx"),
         col("href"),
         HtmlExtract.anchorText(col("__a")).as("anchor_text"),
@@ -315,8 +269,7 @@ object WebGraphOps {
        |      ${HtmlExtract.duckEntities(HtmlExtract.duckAnchorHref("a"))} AS href,
        |      ${HtmlExtract.duckAnchorText("a")} AS anchor_text
        |    FROM ax, entmap)
-       |  WHERE NOT (regexp_matches(href, '$SchemeLike')
-       |             AND NOT regexp_matches(href, '$Hierarchical'))),
+       |  WHERE ${duckHierarchical("href")}),
        |rin AS (
        |  SELECT af.doc_id, af.link_idx, e.url AS base, af.href AS ref
        |  FROM af JOIN ebase e ON af.doc_id = e.doc_id),
@@ -409,7 +362,7 @@ object WebGraphOps {
       .filter(col("__t").isNotNull)
       .withColumn("href",
         HtmlExtract.decodeEntities(HtmlExtract.tagHref(col("__t"))))
-      .filter(hierarchicalOnly(col("href")))
+      .filter(hierarchical(col("href")))
       .select(col("doc_id"), col("tag_idx").cast("long").as("tag_idx"),
         col("href"),
         lower(HtmlExtract.tagRel(col("__t"))).as("rel"),
@@ -436,8 +389,7 @@ object WebGraphOps {
        |      lower(${HtmlExtract.duckTagRel("t")}) AS rel,
        |      ${HtmlExtract.duckRelHasNofollow(HtmlExtract.duckTagRel("t"))} AS nofollow
        |    FROM tx, entmap)
-       |  WHERE NOT (regexp_matches(href, '$SchemeLike')
-       |             AND NOT regexp_matches(href, '$Hierarchical'))),
+       |  WHERE ${duckHierarchical("href")}),
        |rin AS (
        |  SELECT tf.doc_id, tf.tag_idx, e.url AS base, tf.href AS ref
        |  FROM tf JOIN ebase e ON tf.doc_id = e.doc_id),
@@ -468,12 +420,8 @@ object WebGraphOps {
     // 10× sweep read the two-scan join shape at 7.7×; this is the
     // fused map-only shape)
     pagesWithBase(s, dir)
-      .withColumn("__pnf",
-        UrlCanonical.let(HtmlExtract.metaRobotsContents(col("payload"))) { c =>
-          HtmlExtract.metaDirective(c, "nofollow") ||
-            HtmlExtract.metaDirective(c, "none")
-        })
-      .filter(!col("__pnf"))
+      .filter(!HtmlExtract.metaDirective(
+        HtmlExtract.metaRobotsContents(col("payload")), "nofollow", "none"))
       .select(col("doc_id"), col("__base"),
         UrlCanonical.hostOfCanon(
           UrlCanonical.canonicalize(col("__url"))).as("src_host"),
@@ -483,7 +431,7 @@ object WebGraphOps {
       .filter(!HtmlExtract.relHasNofollow(HtmlExtract.tagRel(col("__t"))))
       .withColumn("href",
         HtmlExtract.decodeEntities(HtmlExtract.tagHref(col("__t"))))
-      .filter(hierarchicalOnly(col("href")))
+      .filter(hierarchical(col("href")))
       .select(col("src_host"),
         UrlCanonical.hostOfCanon(UrlCanonical.canonicalize(
           UrlCanonical.resolve(col("__base"), col("href")))).as("dst_host"))
@@ -516,8 +464,7 @@ object WebGraphOps {
        |      ${HtmlExtract.duckEntities(HtmlExtract.duckTagHref("t"))} AS href,
        |      ${HtmlExtract.duckRelHasNofollow(HtmlExtract.duckTagRel("t"))} AS nofollow
        |    FROM tx, entmap)
-       |  WHERE NOT (regexp_matches(href, '$SchemeLike')
-       |             AND NOT regexp_matches(href, '$Hierarchical'))),
+       |  WHERE ${duckHierarchical("href")}),
        |ff AS (
        |  SELECT tf.doc_id, tf.tag_idx, tf.href
        |  FROM tf JOIN pnf ON tf.doc_id = pnf.doc_id
@@ -583,7 +530,7 @@ object WebGraphOps {
       .withColumn("hreflang", HtmlExtract.linkHreflang(col("__t")))
       .withColumn("href",
         HtmlExtract.decodeEntities(HtmlExtract.linkHref(col("__t"))))
-      .filter(col("href") =!= "" && hierarchicalOnly(col("href")))
+      .filter(col("href") =!= "" && hierarchical(col("href")))
       .select(col("doc_id"), col("alt_idx").cast("long").as("alt_idx"),
         col("hreflang"), col("href"),
         UrlCanonical.canonicalize(
@@ -608,8 +555,7 @@ object WebGraphOps {
        |      ${HtmlExtract.duckEntities(HtmlExtract.duckLinkHref("t"))} AS href
        |    FROM hx2, entmap)
        |  WHERE href <> ''
-       |    AND NOT (regexp_matches(href, '$SchemeLike')
-       |             AND NOT regexp_matches(href, '$Hierarchical'))),
+       |    AND ${duckHierarchical("href")}),
        |rin AS (
        |  SELECT hf2.doc_id, hf2.alt_idx, e.url AS base, hf2.href AS ref
        |  FROM hf2 JOIN ebase e ON hf2.doc_id = e.doc_id),
@@ -638,18 +584,10 @@ object WebGraphOps {
     * stylesheet link decoy on every page. Map-only after the zone
     * read. */
   def q172CanonicalLink(s: SparkSession, dir: String): DataFrame =
-    pagesWithBase(s, dir)
-      .withColumn("__ch",
-        HtmlExtract.decodeEntities(HtmlExtract.canonicalHref(col("payload"))))
+    withCanonicalSignal(pagesWithBase(s, dir))
       .select(col("doc_id"),
         UrlCanonical.canonicalize(col("__url")).as("self_canon"),
-        UrlCanonical.let(col("__ch")) { ch =>
-          when(ch.isNull || ch === "" ||
-              (ch.rlike(SchemeLike) && !ch.rlike(Hierarchical)),
-            lit(null))
-            .otherwise(UrlCanonical.canonicalize(
-              UrlCanonical.resolve(col("__base"), ch)))
-        }.as("canonical_canon"))
+        col("canonical_canon"))
       .withColumn("is_self",
         coalesce(col("canonical_canon") === col("self_canon"), lit(false)))
       .withColumn("dedup_key",
@@ -661,19 +599,7 @@ object WebGraphOps {
        |${CorpusOps.htmlInCtes},
        |${CorpusOps.messyUrlMkCte},
        |$duckEbaseCtes,
-       |ch0 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckCanonicalHref("html"))} AS ch
-       |  FROM hin, entmap),
-       |cri AS (
-       |  SELECT c.doc_id, e.url AS base, c.ch AS ref
-       |  FROM ch0 c JOIN ebase e ON c.doc_id = e.doc_id
-       |  WHERE c.ch IS NOT NULL AND c.ch <> ''
-       |    AND NOT (regexp_matches(c.ch, '$SchemeLike')
-       |             AND NOT regexp_matches(c.ch, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("cri", "doc_id", "cn")},
-       |ctin AS (SELECT doc_id, target AS url FROM cn4),
-       |${UrlCanonical.duckCanonCtes("ctin", "doc_id", idn, "cx")},
+       |${duckCanonicalCtes(idn)},
        |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")}
        |SELECT h.doc_id, s4.canon AS self_canon, cx4.canon AS canonical_canon,
        |  coalesce(cx4.canon = s4.canon, false) AS is_self,
@@ -785,27 +711,6 @@ object WebGraphOps {
        |  (rt.rn <= qa.quota) AS kept
        |FROM rt JOIN qa USING (host)""".stripMargin
 
-  /** The effective-base CTE chain (RFC 3986 §5.1.1, mirrored from
-    * [[pagesWithBase]]): first `<base href>` decoded; usable ones
-    * (non-empty, hierarchical) resolved against the retrieval URI;
-    * `ebase (doc_id, url)` = the resolution base per doc. Assumes
-    * `entmap`, `hin`, and `mk` are in scope. */
-  private def duckEbaseCtes: String =
-    s"""bh1 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckBaseHref("html"))} AS bh
-       |  FROM hin, entmap),
-       |bri AS (
-       |  SELECT b.doc_id, mk.url AS base, b.bh AS ref
-       |  FROM bh1 b JOIN mk ON b.doc_id = mk.doc_id
-       |  WHERE b.bh IS NOT NULL AND b.bh <> ''
-       |    AND NOT (regexp_matches(b.bh, '$SchemeLike')
-       |             AND NOT regexp_matches(b.bh, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("bri", "doc_id", "eb")},
-       |ebase AS (
-       |  SELECT mk.doc_id, coalesce(eb4.target, mk.url) AS url
-       |  FROM mk LEFT JOIN eb4 ON mk.doc_id = eb4.doc_id)""".stripMargin
-
   /** The q150 CTE chain WITHOUT the leading WITH/final SELECT — the
     * reusable prefix q151 builds on. */
   private def outlinkCtePrefix: String = {
@@ -824,8 +729,7 @@ object WebGraphOps {
        |    SELECT doc_id, link_idx,
        |      ${HtmlExtract.duckEntities("rawref")} AS href
        |    FROM lx, entmap)
-       |  WHERE NOT (regexp_matches(href, '$SchemeLike')
-       |             AND NOT regexp_matches(href, '$Hierarchical'))),
+       |  WHERE ${duckHierarchical("href")}),
        |rin AS (
        |  SELECT lf.doc_id, lf.link_idx, e.url AS base, lf.href AS ref
        |  FROM lf JOIN ebase e ON lf.doc_id = e.doc_id),

@@ -31,12 +31,6 @@ object Clustering {
   def fixedPoint(vec: Column): Column =
     transform(vec, x => floor(x.cast("double") * lit(1e6) + lit(0.5)).cast("long"))
 
-  /** Integer squared L2 distance to one quantized centroid literal. */
-  private def sqDistFx(fx: Column, centroid: Array[Long]): Column =
-    aggregate(
-      zip_with(fx, lit(centroid), (a, b) => (a - b) * (a - b)),
-      lit(0L), (acc, v) => acc + v)
-
   /** Corpus-adaptive cluster count for cluster-bounded quadratic work
     * (SemDeDup's within-cluster pair scan, and any operator whose cost
     * is Σ_clusters |c|²). With k FIXED, mean cluster size grows
@@ -65,10 +59,7 @@ object Clustering {
 
   /** The assignment struct (cid, dist) for one vector column — the
     * NATIVE codegen path (functions.NearestCentroid): one compiled
-    * k×dim integer loop per row with early abandon. The composed
-    * HOF form ([[assignFold]]) is k interpreted folds per row —
-    * identical results, ~2 orders of magnitude slower at
-    * corpus-scaled centroid counts (see the expression's Scaladoc). */
+    * k×dim integer loop per row with early abandon. */
   def nearestStruct(vec: Column, centroids: Array[Array[Long]]): Column = {
     require(centroids.nonEmpty, "need at least one centroid")
     call_function("nearest_cid", vec,
@@ -189,17 +180,4 @@ object Clustering {
              centroids: Array[Array[Long]]): DataFrame =
     corpus.select(col(idCol), nearestStruct(col(vecCol), centroids).as("__nc"))
       .select(col(idCol), col("__nc.cid").as("cid"), col("__nc.dist").as("dist"))
-
-  /** Registration-free composed form of [[assign]] (interpreted HOF
-    * folds — for sessions without GraftExtensions; bit-identical
-    * results, asserted by ClusteringSpec). */
-  def assignFold(corpus: DataFrame, idCol: String, vecCol: String,
-                 centroids: Array[Array[Long]]): DataFrame = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    val fx = fixedPoint(col(vecCol))
-    val dists = array(centroids.map(c => sqDistFx(fx, c)): _*)
-    corpus.select(col(idCol),
-        (array_position(dists, array_min(dists)) - 1).cast("long").as("cid"),
-        array_min(dists).as("dist"))
-  }
 }

@@ -21,17 +21,9 @@ object Similarity {
   /** Sequential dot product in double precision (element order = array
     * order on both engines → bit-identical results). Backed by the
     * native codegen'd DotProduct expression (functions.DotProduct) —
-    * sessions built by GraftSession/Verify/Bench/tests register it; the
-    * interpreted fold `dotFold` below is the registration-free form. */
+    * sessions built by GraftSession/Verify/Bench/tests register it. */
   def dot(a: Column, b: Column): Column =
     call_function("dot_product", a, b)
-
-  /** The composed higher-order-function form of `dot` — identical
-    * accumulation order and null semantics, no function registration
-    * needed, but interpreted per element (HOFs are CodegenFallback). */
-  def dotFold(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 

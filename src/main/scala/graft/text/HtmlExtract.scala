@@ -80,11 +80,12 @@ object HtmlExtract {
     * not an outlink). Values are the RAW attribute text — callers
     * entity-decode ([[decodeEntities]]) before resolving, as a browser
     * does. Map-only. */
-  def hrefs(html: Column): Column = {
-    val deScripted = DropPats.foldLeft(html)(
-      (acc, pat) => regexp_replace(acc, pat, " "))
-    regexp_extract_all(deScripted, lit(HrefPat), lit(1))
-  }
+  def hrefs(html: Column): Column =
+    regexp_extract_all(deScript(html), lit(HrefPat), lit(1))
+
+  /** The four sequential non-content drops ([[DropPats]], in order). */
+  private def deScript(html: Column): Column =
+    DropPats.foldLeft(html)((acc, pat) => regexp_replace(acc, pat, " "))
 
   /** DuckDB spelling of the four sequential non-content drops. */
   def duckDescript(e: String): String =
@@ -107,11 +108,8 @@ object HtmlExtract {
     * itself a reference; a RELATIVE base resolves against §5.1.3's
     * retrieval URI), then resolve the page's links against the result.
     * Quoting caveats shared with [[hrefs]]. Map-only. */
-  def baseHref(html: Column): Column = {
-    val deScripted = DropPats.foldLeft(html)(
-      (acc, pat) => regexp_replace(acc, pat, " "))
-    get(regexp_extract_all(deScripted, lit(BaseHrefPat), lit(1)), lit(0))
-  }
+  def baseHref(html: Column): Column =
+    get(regexp_extract_all(deScript(html), lit(BaseHrefPat), lit(1)), lit(0))
 
   private val BaseHrefPat =
     "(?is)<base\\b[^>]*?\\shref\\s*=\\s*[\"']([^\"']*)[\"']"
@@ -129,12 +127,9 @@ object HtmlExtract {
     * whose closing tag never appears has a target but no text, so it
     * counts as an outlink (q150) but not an anchor-text pair —
     * documented, not incidental. */
-  def anchors(html: Column): Column = {
-    val deScripted = DropPats.foldLeft(html)(
-      (acc, pat) => regexp_replace(acc, pat, " "))
-    regexp_extract_all(deScripted,
+  def anchors(html: Column): Column =
+    regexp_extract_all(deScript(html),
       lit("(?is)<a\\b[^>]*?\\shref\\s*=\\s*[\"'][^\"']*[\"'][^>]*>.*?</a>"), lit(0))
-  }
 
   /** The href of one [[anchors]] element (raw attribute text). */
   def anchorHref(a: Column): Column =
@@ -160,11 +155,8 @@ object HtmlExtract {
     * doesn't require the tag to close) the wrong recall class.
     * Narrower than [[hrefs]] by construction: an href in a tag whose
     * `>` never comes is an outlink with no parseable attributes. */
-  def hrefTags(html: Column): Column = {
-    val deScripted = DropPats.foldLeft(html)(
-      (acc, pat) => regexp_replace(acc, pat, " "))
-    regexp_extract_all(deScripted, lit(HrefTagPat), lit(0))
-  }
+  def hrefTags(html: Column): Column =
+    regexp_extract_all(deScript(html), lit(HrefTagPat), lit(0))
 
   private val HrefTagPat =
     "(?is)<a\\b[^>]*?\\shref\\s*=\\s*[\"'][^\"']*[\"'][^>]*>"
@@ -201,9 +193,7 @@ object HtmlExtract {
     * whole meta tags and filters by the name attribute; multiple
     * robots metas UNION their directives (the conservative read). */
   def metaRobotsContents(html: Column): Column = {
-    val deScripted = DropPats.foldLeft(html)(
-      (acc, pat) => regexp_replace(acc, pat, " "))
-    val tags = regexp_extract_all(deScripted, lit(MetaTagPat), lit(0))
+    val tags = regexp_extract_all(deScript(html), lit(MetaTagPat), lit(0))
     filter(
       transform(tags, t =>
         when(lower(regexp_extract(t, NameAttrPat, 1)) === "robots",
@@ -223,9 +213,7 @@ object HtmlExtract {
     * order free, name-only metas never count, first wins. NULL when
     * absent; callers parse the `delay[;url=target]` payload. */
   def metaRefreshContent(html: Column): Column = {
-    val deScripted = DropPats.foldLeft(html)(
-      (acc, pat) => regexp_replace(acc, pat, " "))
-    val tags = regexp_extract_all(deScripted, lit(MetaTagPat), lit(0))
+    val tags = regexp_extract_all(deScript(html), lit(MetaTagPat), lit(0))
     get(filter(
       transform(tags, t =>
         when(lower(regexp_extract(t, EquivAttrPat, 1)) === "refresh",
@@ -253,9 +241,7 @@ object HtmlExtract {
     * page declares none. Raw attribute text — callers decode and
     * resolve against the page's effective base. */
   def canonicalHref(html: Column): Column = {
-    val deScripted = DropPats.foldLeft(html)(
-      (acc, pat) => regexp_replace(acc, pat, " "))
-    val tags = regexp_extract_all(deScripted, lit(LinkTagPat), lit(0))
+    val tags = regexp_extract_all(deScript(html), lit(LinkTagPat), lit(0))
     get(filter(
       transform(tags, t =>
         when(lower(regexp_extract(t, RelAttrPat, 1))
@@ -287,9 +273,7 @@ object HtmlExtract {
     * Document order preserved; callers read the attributes off each
     * tag with [[linkHreflang]]/[[linkHref]]. */
   def alternateLinks(html: Column): Column = {
-    val deScripted = DropPats.foldLeft(html)(
-      (acc, pat) => regexp_replace(acc, pat, " "))
-    val tags = regexp_extract_all(deScripted, lit(LinkTagPat), lit(0))
+    val tags = regexp_extract_all(deScript(html), lit(LinkTagPat), lit(0))
     filter(tags, t =>
       lower(regexp_extract(t, RelAttrPat, 1))
         .rlike("(^|\\s)alternate(\\s|$)") &&
@@ -320,11 +304,14 @@ object HtmlExtract {
   def duckLinkHref(t: String): String =
     s"""regexp_extract($t, '(?is)\\shref\\s*=\\s*["'']([^"'']*)["'']', 1)"""
 
-  /** Whether any robots-meta content carries `token` — directives are
-    * a comma-separated list with free whitespace, matched as TOKENS
-    * (inputs already lowercased by [[metaRobotsContents]]). */
-  def metaDirective(contents: Column, token: String): Column =
-    exists(contents, c => c.rlike(s"(^|[\\s,])$token([\\s,]|$$)"))
+  /** Whether any robots-meta content carries one of `tokens` —
+    * directives are a comma-separated list with free whitespace,
+    * matched as TOKENS (inputs already lowercased by
+    * [[metaRobotsContents]]). `contents` is read once, however many
+    * tokens are asked for. */
+  def metaDirective(contents: Column, tokens: String*): Column =
+    exists(contents, c =>
+      tokens.map(t => c.rlike(s"(^|[\\s,])$t([\\s,]|$$)")).reduce(_ || _))
 
   /** DuckDB twins of the robots-meta machinery. */
   def duckMetaRobotsContents(e: String): String =
@@ -405,9 +392,7 @@ object HtmlExtract {
     * document (pre-filter, so it is stable under classification
     * changes). Map-only. */
   def blocks(df: DataFrame, idCol: String, htmlCol: Column): DataFrame = {
-    val deScripted = DropPats.foldLeft(htmlCol)(
-      (acc, pat) => regexp_replace(acc, pat, " "))
-    val marked = regexp_replace(deScripted, BlockPat, Sentinel)
+    val marked = regexp_replace(deScript(htmlCol), BlockPat, Sentinel)
     val frags = split(marked, Sentinel)
     val exploded = df.select(col(idCol),
         posexplode_outer(frags).as(Seq("block_idx", "frag")))

@@ -88,16 +88,17 @@ object UrlCanonical {
   private[text] def substrFrom(p: Column, from: Column): Column =
     p.substr(from, greatest(length(p) - from + lit(1), lit(0)))
 
-  /** A LET-BINDING for column expressions: evaluate `value` once and
-    * reference it as a lambda variable inside `body`. Column vals in
-    * Scala are TEXTUAL substitution — every use site gets a full copy
-    * of the subtree, so chaining canonicalize∘resolve multiplied into
-    * a ~10⁶-node expression (planning OOM, found wiring q150). A
-    * higher-order-function lambda variable is a true binding (one node
-    * per use; Catalyst never inlines lambda variables), at the cost of
-    * a one-element array per binding per row — noise next to the regex
-    * work these expressions do. */
-  private[graft] def let(value: Column)(body: Column => Column): Column =
+  /** A LET-BINDING for the `column*` reference twins: evaluate `value`
+    * once and reference it as a lambda variable inside `body`. Column
+    * vals in Scala are TEXTUAL substitution — every use site gets a full
+    * copy of the subtree, so the composed algebra multiplied into a
+    * ~10⁶-node expression (planning OOM, found wiring q150). A lambda
+    * variable is a true binding, but a higher-order function: its whole
+    * subtree evaluates interpreted. Queries bind with a named column
+    * instead (`withColumn`; CollapseProject keeps a non-cheap column
+    * referenced more than once in its own Project), which stays in
+    * whole-stage codegen. */
+  private[text] def let(value: Column)(body: Column => Column): Column =
     element_at(transform(array(value), body), 1)
 
   /** The canonical HOST of a url — the per-domain grouping/cap key

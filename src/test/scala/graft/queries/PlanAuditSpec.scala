@@ -598,4 +598,35 @@ class PlanAuditSpec extends SparkTestBase {
     val p = plan(df)
     assert(p.contains("BroadcastHashJoin"), s"gate scale must broadcast:\n$p")
   }
+
+  test("zone link signals: no let binding in any zone plan; one <base> href extraction per effective base") {
+    val zone = Seq[(String, WebGraphOps.Q)](
+      "q150" -> WebGraphOps.q150Outlinks,
+      "q155" -> WebGraphOps.q155AnchorText,
+      "q169" -> WebGraphOps.q169NofollowEdges,
+      "q171" -> WebGraphOps.q171FollowedEdges,
+      "q172" -> WebGraphOps.q172CanonicalLink,
+      "q175" -> CorpusOps.q175MetaRefresh,
+      "q177" -> CorpusOps.q177ConsolidationKey,
+      "q181" -> WebGraphOps.q181RedirectAwareEdges,
+      "q182" -> WebGraphOps.q182HreflangAlternates,
+      "q183" -> CorpusOps.q183ConsolidatedCorpus)
+    for ((name, q) <- zone) {
+      val p = plan(q(spark, dir))
+      // UrlCanonical.let is element_at(transform(array(v), body), 1): a
+      // higher-order function, which evaluates its whole subtree (the
+      // native url_* calls included) interpreted
+      assert(!p.contains("transform(array("),
+        s"$name binds a value with a higher-order function:\n$p")
+      // the base href is a named column read five times by __base;
+      // CollapseProject inlining it would repeat the regex per use. One
+      // extraction per effective base (the zone read's clean and
+      // suspect-file branches each compute their own)
+      if (Set("q150", "q175", "q177", "q183")(name)) {
+        val bases = countOf(p, " AS __base#")
+        assert(bases > 0 && countOf(p, "<base\\b") == bases,
+          s"$name must extract the <base> href once per effective base:\n$p")
+      }
+    }
+  }
 }
